@@ -45,9 +45,165 @@ from .families import (
 )
 
 
-def _out_schema(df: DataFrame, group_cols: list[str], output_col: str) -> StructType:
-    fields = [df.schema[c] for c in group_cols]
-    return StructType(list(fields) + [StructField(output_col, BinaryType(), True)])
+# accumulate Arrow batches into larger chunks before grouping so the
+# pandas groupby + sketch-update cost is amortized (an Arrow batch is
+# ~10k rows; a chunk is up to 512k) -- bounded memory per task
+_CHUNK_ROWS = 1 << 19
+
+
+def _fold_chunks(
+    batches: Iterator[pd.DataFrame], group_cols: list[str], fold
+) -> dict:
+    """The phase-1 ``Operation`` loop shared by every partial builder:
+    buffer Arrow batches into chunks, split each chunk by group key and
+    fold it into that key's state via ``fold(state_or_None, sub) ->
+    state``.  Returns ``{key tuple: state}`` (``()`` when ungrouped)."""
+    acc: dict[tuple, object] = {}
+    buf: list[pd.DataFrame] = []
+    nbuf = 0
+
+    def flush() -> None:
+        nonlocal buf, nbuf
+        if not buf:
+            return
+        pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
+        buf, nbuf = [], 0
+        if group_cols:
+            for key, sub in pdf.groupby(group_cols, dropna=False, sort=False):
+                key = key if isinstance(key, tuple) else (key,)
+                acc[key] = fold(acc.get(key), sub)
+        else:
+            acc[()] = fold(acc.get(()), pdf)
+
+    for pdf in batches:
+        buf.append(pdf)
+        nbuf += len(pdf)
+        if nbuf >= _CHUNK_ROWS:
+            flush()
+    flush()
+    return acc
+
+
+def _map_fold(
+    df: DataFrame,
+    group_cols: list[str],
+    value_cols: list[str],
+    schema: StructType,
+    fold,
+    emit,
+) -> DataFrame:
+    """Phase 1 as one ``mapInPandas`` over ``group_cols + value_cols``:
+    fold the partition's rows per group (:func:`_fold_chunks`) and emit
+    one ``key + emit(state)`` row per group -- the only rows that reach
+    the shuffle."""
+    names = schema.fieldNames()
+
+    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        acc = _fold_chunks(batches, group_cols, fold)
+        if acc:
+            rows = [list(key) + emit(state) for key, state in acc.items()]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(*group_cols, *value_cols).mapInPandas(build, schema=schema)
+
+
+def _spec_fold(specs: list[tuple], kinds: list, weight_col: str | None = None):
+    """Fold callback building one sketch per ``(input_col, family, k,
+    output_col)`` spec; the state is the list of sketches.  ``kinds``
+    are the specs' Spark-side value kinds: a null-bearing Arrow batch
+    of an integral column arrives float64 and must be coerced back (5
+    and 5.0 hash differently -- families.coerce_value_batch)."""
+
+    def fold(sks, sub: pd.DataFrame):
+        if sks is None:
+            sks = [None] * len(specs)
+        for i, (col, family, k, _out) in enumerate(specs):
+            if weight_col is not None:
+                series, w = coerce_value_batch(sub[col], kinds[i], sub[weight_col])
+            else:
+                series = coerce_value_batch(sub[col], kinds[i])
+            if sks[i] is None:
+                sks[i] = create_sketch(family, build_params(family, k, series))
+            if weight_col is not None:
+                sks[i].update_series(series, weights=w)
+            else:
+                update_sketch(family, sks[i], series)
+        return sks
+
+    return fold
+
+
+def _blob_schema(
+    df: DataFrame, group_cols: list[str], blob_cols: list[str]
+) -> StructType:
+    return StructType(
+        [df.schema[c] for c in group_cols]
+        + [StructField(c, BinaryType(), True) for c in blob_cols]
+    )
+
+
+def _spec_partial(
+    df: DataFrame,
+    specs: list[tuple],
+    group_cols: list[str],
+    weight_col: str | None = None,
+) -> DataFrame:
+    """Phase 1 for spec sketches: ``group_cols + [output_col BINARY per
+    spec]``, one row per (partition, group)."""
+    in_cols = [s[0] for s in specs] + ([weight_col] if weight_col is not None else [])
+    kinds = [spark_value_kind(df.schema[s[0]].dataType) for s in specs]
+    return _map_fold(
+        df,
+        group_cols,
+        list(dict.fromkeys(in_cols)),  # stable unique
+        _blob_schema(df, group_cols, [s[3] for s in specs]),
+        _spec_fold(specs, kinds, weight_col),
+        lambda sks: [sk.serialize() for sk in sks],
+    )
+
+
+def _spec_merge(
+    partial: DataFrame,
+    specs: list[tuple],
+    group_cols: list[str],
+    finalize=None,
+    finalize_schema: str | StructType | None = None,
+) -> DataFrame:
+    """Phase 2: merge each spec's partial blobs per group (``Combine``)
+    and either emit the merged blobs or, with ``finalize`` (``dict[
+    output_col, sketch] -> dict[col, value]``), answer them in the same
+    Python round (``Finalize``)."""
+    blob_cols = [s[3] for s in specs]
+    if finalize is None:
+        schema = _blob_schema(partial, group_cols, blob_cols)
+    else:
+        if finalize_schema is None:
+            raise ValueError("finalize requires finalize_schema")
+        extra = (
+            StructType.fromDDL(finalize_schema)
+            if isinstance(finalize_schema, str)
+            else finalize_schema
+        )
+        schema = StructType(
+            [partial.schema[c] for c in group_cols] + list(extra.fields)
+        )
+    out_names = schema.fieldNames()[len(group_cols):]
+
+    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
+        merged: dict[str, object] = {}
+        for _col, family, k, out_col in specs:
+            series = pdf[out_col]
+            sk = create_sketch(family, build_params(family, k, series))
+            update_sketch(family, sk, series, merge=True)  # blob series
+            merged[out_col] = sk
+        if finalize is not None:
+            vals = finalize(merged)
+        else:
+            vals = {c: sk.serialize() for c, sk in merged.items()}
+        row = [pdf[c].iloc[0] for c in group_cols] + [vals[n] for n in out_names]
+        return pd.DataFrame([row], columns=group_cols + out_names)
+
+    return partial.groupBy(*group_cols).applyInPandas(merge, schema=schema)
 
 
 def sketch_partial(
@@ -67,74 +223,14 @@ def sketch_partial(
     shuffles raw rows; this shuffles one bounded blob per partition ×
     group, and bottom-(k+1) retention makes the estimation threshold
     merge-exact, sketches/reservoir.py)."""
-    group_cols = list(group_cols or [])
     if weight_col is not None and family not in ("reservoir", "ebpps"):
         raise ValueError(
             "weight_col is only supported by the sampling families "
             "(reservoir, ebpps)"
         )
-    schema = _out_schema(df, group_cols, output_col)
-    cols = group_cols + [input_col]
-    if weight_col is not None:
-        cols.append(weight_col)
-    # captured Spark-side type: a null-bearing Arrow batch of an
-    # integral column arrives float64 and must be coerced back (5 and
-    # 5.0 hash differently — families.coerce_value_batch)
-    kind = spark_value_kind(df.schema[input_col].dataType)
-
-    def _update(sk, sub) -> None:
-        if weight_col is not None:
-            v, w = coerce_value_batch(sub[input_col], kind, sub[weight_col])
-            sk.update_series(v, weights=w)
-        else:
-            update_sketch(family, sk, coerce_value_batch(sub[input_col], kind))
-
-    # accumulate Arrow batches into larger chunks before grouping so the
-    # pandas groupby + sketch-update cost is amortized (an Arrow batch is
-    # ~10k rows; a chunk is up to 512k) -- bounded memory per task
-    chunk_rows = 1 << 19
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, object] = {}
-        buf: list[pd.DataFrame] = []
-        nbuf = 0
-
-        def flush() -> None:
-            nonlocal buf, nbuf
-            if not buf:
-                return
-            pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            buf, nbuf = [], 0
-            if group_cols:
-                for key, sub in pdf.groupby(group_cols, dropna=False, sort=False):
-                    if not isinstance(key, tuple):
-                        key = (key,)
-                    sk = acc.get(key)
-                    if sk is None:
-                        series = coerce_value_batch(sub[input_col], kind)
-                        sk = acc[key] = create_sketch(
-                            family, build_params(family, k, series)
-                        )
-                    _update(sk, sub)
-            else:
-                sk = acc.get(())
-                if sk is None:
-                    series = coerce_value_batch(pdf[input_col], kind)
-                    sk = acc[()] = create_sketch(family, build_params(family, k, series))
-                _update(sk, pdf)
-
-        for pdf in batches:
-            buf.append(pdf)
-            nbuf += len(pdf)
-            if nbuf >= chunk_rows:
-                flush()
-        flush()
-        if acc:
-            rows = [list(key) + [sk.serialize()] for key, sk in acc.items()]
-            out = pd.DataFrame(rows, columns=group_cols + [output_col])
-            yield out
-
-    return df.select(*cols).mapInPandas(build, schema=schema)
+    return _spec_partial(
+        df, [(input_col, family, k, output_col)], list(group_cols or []), weight_col
+    )
 
 
 def sketch_merge(
@@ -155,37 +251,13 @@ def sketch_merge(
     (estimate, quantiles, weights) in the SAME Python round as the
     merge instead of a separate Arrow scalar-UDF pass -- one fewer
     Python round-trip per query, identical results."""
-    group_cols = list(group_cols or [])
-    if finalize is not None:
-        if finalize_schema is None:
-            raise ValueError("finalize requires finalize_schema")
-        extra = (
-            StructType.fromDDL(finalize_schema)
-            if isinstance(finalize_schema, str)
-            else finalize_schema
-        )
-        schema = StructType(
-            [partial.schema[c] for c in group_cols] + list(extra.fields)
-        )
-        out_names = [f.name for f in extra.fields]
-    else:
-        schema = _out_schema(partial, group_cols, sketch_col)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        series = pdf[sketch_col]
-        sk = create_sketch(family, build_params(family, k, series))
-        update_sketch(family, sk, series, merge=True)  # blob series
-        keys = [pdf[c].iloc[0] for c in group_cols]
-        if finalize is not None:
-            vals = finalize(sk)
-            row = keys + [vals[n] for n in out_names]
-            return pd.DataFrame([row], columns=group_cols + out_names)
-        row = keys + [sk.serialize()]
-        return pd.DataFrame([row], columns=group_cols + [sketch_col])
-
-    if group_cols:
-        return partial.groupBy(*group_cols).applyInPandas(merge, schema=schema)
-    return partial.groupBy().applyInPandas(merge, schema=schema)
+    return _spec_merge(
+        partial,
+        [(sketch_col, family, k, sketch_col)],
+        list(group_cols or []),
+        None if finalize is None else (lambda sks: finalize(sks[sketch_col])),
+        finalize_schema,
+    )
 
 
 def sketch_agg(
@@ -244,88 +316,8 @@ def sketch_agg_multi(
     out_cols = [s[3] for s in specs]
     if len(set(out_cols)) != len(out_cols):
         raise ValueError("duplicate output_col in specs")
-    in_cols = list(dict.fromkeys([s[0] for s in specs]))  # stable unique
-    kinds = [spark_value_kind(df.schema[s[0]].dataType) for s in specs]
-
-    fields = [df.schema[c] for c in group_cols]
-    schema = StructType(
-        list(fields) + [StructField(c, BinaryType(), True) for c in out_cols]
-    )
-    if finalize is not None:
-        if finalize_schema is None:
-            raise ValueError("finalize requires finalize_schema")
-        extra = (
-            StructType.fromDDL(finalize_schema)
-            if isinstance(finalize_schema, str)
-            else finalize_schema
-        )
-        merge_schema = StructType(list(fields) + list(extra.fields))
-        fin_names = [f.name for f in extra.fields]
-    else:
-        merge_schema = schema
-        fin_names = []
-    chunk_rows = 1 << 19
-
-    def build(batches):
-        acc: dict[tuple, list] = {}
-        buf: list[pd.DataFrame] = []
-        nbuf = 0
-
-        def fold(key: tuple, sub: pd.DataFrame) -> None:
-            sks = acc.get(key)
-            if sks is None:
-                sks = acc[key] = [None] * len(specs)
-            for i, (col, family, k, _out) in enumerate(specs):
-                series = coerce_value_batch(sub[col], kinds[i])
-                if sks[i] is None:
-                    sks[i] = create_sketch(family, build_params(family, k, series))
-                update_sketch(family, sks[i], series)
-
-        def flush() -> None:
-            nonlocal buf, nbuf
-            if not buf:
-                return
-            pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            buf, nbuf = [], 0
-            if group_cols:
-                for key, sub in pdf.groupby(group_cols, dropna=False, sort=False):
-                    fold(key if isinstance(key, tuple) else (key,), sub)
-            else:
-                fold((), pdf)
-
-        for pdf in batches:
-            buf.append(pdf)
-            nbuf += len(pdf)
-            if nbuf >= chunk_rows:
-                flush()
-        flush()
-        if acc:
-            rows = [
-                list(key) + [sk.serialize() if sk is not None else None for sk in sks]
-                for key, sks in acc.items()
-            ]
-            yield pd.DataFrame(rows, columns=group_cols + out_cols)
-
-    partial = df.select(*(group_cols + in_cols)).mapInPandas(build, schema=schema)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = [pdf[c].iloc[0] for c in group_cols]
-        merged: dict[str, object] = {}
-        for col, family, k, out_col in specs:
-            series = pdf[out_col].dropna()
-            sk = create_sketch(family, build_params(family, k, series))
-            update_sketch(family, sk, series, merge=True)  # blob series
-            merged[out_col] = sk
-        if finalize is not None:
-            vals = finalize(merged)
-            row = keys + [vals[n] for n in fin_names]
-            return pd.DataFrame([row], columns=group_cols + fin_names)
-        row = keys + [merged[c].serialize() for c in out_cols]
-        return pd.DataFrame([row], columns=group_cols + out_cols)
-
-    if group_cols:
-        return partial.groupBy(*group_cols).applyInPandas(merge, schema=merge_schema)
-    return partial.groupBy().applyInPandas(merge, schema=merge_schema)
+    partial = _spec_partial(df, specs, group_cols)
+    return _spec_merge(partial, specs, group_cols, finalize, finalize_schema)
 
 
 def tuple_sketch_partial(
@@ -347,56 +339,26 @@ def tuple_sketch_partial(
 
     group_cols = list(group_cols or [])
     value_cols = list(value_cols)
-    schema = _out_schema(df, group_cols, output_col)
-    cols = group_cols + [key_col] + value_cols
     lgk = lg_k if lg_k is not None else DEFAULT_LG_K
-    m = len(value_cols)
     key_kind = spark_value_kind(df.schema[key_col].dataType)
-    chunk_rows = 1 << 19
 
-    def build(batches) -> "Iterator[pd.DataFrame]":
-        acc: dict[tuple, AodSketch] = {}
-        buf: list[pd.DataFrame] = []
-        nbuf = 0
+    def fold(sk, sub: pd.DataFrame):
+        if sk is None:
+            sk = AodSketch(lgk, len(value_cols))
+        # NULL keys are dropped (update_batch skips them anyway) with
+        # their summary rows, so a nullable-int key hashes as int64
+        keys, vals = coerce_value_batch(sub[key_col], key_kind, sub[value_cols])
+        sk.update_batch(keys, vals.to_numpy(dtype="float64", na_value=0.0))
+        return sk
 
-        def upd(key: tuple, sub: pd.DataFrame) -> None:
-            sk = acc.get(key)
-            if sk is None:
-                sk = acc[key] = AodSketch(lgk, m)
-            keys = sub[key_col]
-            if key_kind == "int64" and keys.dtype.kind == "f":
-                # nullable-int upcast: drop NULL keys (update_batch
-                # skips them anyway) and restore int64 so the key
-                # hashes match the clean partitions'
-                sub = sub[keys.notna()]
-                keys = sub[key_col].astype("int64")
-            sk.update_batch(
-                keys, sub[value_cols].to_numpy(dtype="float64", na_value=0.0)
-            )
-
-        def flush() -> None:
-            nonlocal buf, nbuf
-            if not buf:
-                return
-            pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            buf, nbuf = [], 0
-            if group_cols:
-                for key, sub in pdf.groupby(group_cols, dropna=False, sort=False):
-                    upd(key if isinstance(key, tuple) else (key,), sub)
-            else:
-                upd((), pdf)
-
-        for pdf in batches:
-            buf.append(pdf)
-            nbuf += len(pdf)
-            if nbuf >= chunk_rows:
-                flush()
-        flush()
-        if acc:
-            rows = [list(key) + [sk.serialize()] for key, sk in acc.items()]
-            yield pd.DataFrame(rows, columns=group_cols + [output_col])
-
-    return df.select(*cols).mapInPandas(build, schema=schema)
+    return _map_fold(
+        df,
+        group_cols,
+        [key_col] + value_cols,
+        _blob_schema(df, group_cols, [output_col]),
+        fold,
+        lambda sk: [sk.serialize()],
+    )
 
 
 def tuple_sketch_agg(
@@ -493,52 +455,22 @@ def theta_partial_state(
             StructField(theta_col, LongType(), True),
         ]
     )
-    chunk_rows = 1 << 19
     kind = spark_value_kind(df.schema[input_col].dataType)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, ThetaSketch] = {}
-        buf: list[pd.DataFrame] = []
-        nbuf = 0
+    def fold(sk, sub: pd.DataFrame):
+        if sk is None:
+            sk = ThetaSketch(lg_k)
+        sk.update_values(coerce_value_batch(sub[input_col].dropna(), kind))
+        return sk
 
-        def fold(key: tuple, series: pd.Series) -> None:
-            sk = acc.get(key)
-            if sk is None:
-                sk = acc[key] = ThetaSketch(lg_k)
-            sk.update_values(coerce_value_batch(series.dropna(), kind))
+    def emit(sk) -> list:
+        sk._consolidate()
+        return [
+            sk.hashes.astype("int64").tolist(),
+            None if sk.theta == MAX_HASH else int(sk.theta),
+        ]
 
-        def flush() -> None:
-            nonlocal buf, nbuf
-            if not buf:
-                return
-            pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            buf, nbuf = [], 0
-            if group_cols:
-                for key, sub in pdf.groupby(group_cols, dropna=False, sort=False):
-                    fold(key if isinstance(key, tuple) else (key,), sub[input_col])
-            else:
-                fold((), pdf[input_col])
-
-        for pdf in batches:
-            buf.append(pdf)
-            nbuf += len(pdf)
-            if nbuf >= chunk_rows:
-                flush()
-        flush()
-        if acc:
-            rows = []
-            for key, sk in acc.items():
-                sk._consolidate()
-                rows.append(
-                    list(key)
-                    + [
-                        sk.hashes.astype("int64").tolist(),
-                        None if sk.theta == MAX_HASH else int(sk.theta),
-                    ]
-                )
-            yield pd.DataFrame(rows, columns=group_cols + [hashes_col, theta_col])
-
-    return df.select(*(group_cols + [input_col])).mapInPandas(build, schema=schema)
+    return _map_fold(df, group_cols, [input_col], schema, fold, emit)
 
 
 def _theta_survivors(k: int, hashes_col: str = "__h", theta_col: str = "__th"):

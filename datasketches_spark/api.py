@@ -14,6 +14,15 @@ Example::
     (df.groupBy("country")
        .agg(ds.theta("user_id").alias("sk"))
        .select("country", ds.theta_estimate("sk")))
+
+``api.<name>(*args)`` calls ``datasketch_<name>``: a ``str`` argument
+is a column name, a ``Column`` passes through and anything else is a
+literal, so ``ds.kll(200, "x")`` is ``datasketch_kll(200, x)``.
+Argument shapes to note: ``aod(lg_k, key, values)`` takes ``values``
+as an array<double> column (``F.array(...)``; repeated keys SUM their
+summaries); ``fdt(lg_k, dims)`` takes ``dims`` as an array<string>
+column; ``bloomfilter(lg_m, col)`` builds the Apache-wire BloomFilter
+(cross-system bits; 6 hashes, seed 9001).
 """
 
 from __future__ import annotations
@@ -22,126 +31,20 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _c(x):
-    return x if isinstance(x, Column) else F.col(x)
-
-
 def _call(name, *args) -> Column:
-    return F.call_udf(name, *[a if isinstance(a, Column) else _c(a) if isinstance(a, str) else F.lit(a) for a in args])
+    return F.call_udf(
+        name,
+        *[a if isinstance(a, Column) else F.col(a) if isinstance(a, str) else F.lit(a) for a in args],
+    )
 
-
-# ---- aggregates -----------------------------------------------------------
-
-def theta(col) -> Column:
-    return _call("datasketch_theta", col)
-
-
-def theta_lgk(lg_k: int, col) -> Column:
-    return F.call_udf("datasketch_theta_lgk", F.lit(lg_k), _c(col))
-
-
-def kll(k: int, col) -> Column:
-    return F.call_udf("datasketch_kll", F.lit(k), _c(col))
-
-
-def quantiles(k: int, col) -> Column:
-    return F.call_udf("datasketch_quantiles", F.lit(k), _c(col))
-
-
-def req(k: int, col) -> Column:
-    return F.call_udf("datasketch_req", F.lit(k), _c(col))
-
-
-def tdigest(k: int, col) -> Column:
-    return F.call_udf("datasketch_tdigest", F.lit(k), _c(col))
-
-
-def hll(lg_k: int, col) -> Column:
-    return F.call_udf("datasketch_hll", F.lit(lg_k), _c(col))
-
-
-def hll_union(lg_k: int, col) -> Column:
-    return F.call_udf("datasketch_hll_union", F.lit(lg_k), _c(col))
-
-
-def cpc(lg_k: int, col) -> Column:
-    return F.call_udf("datasketch_cpc", F.lit(lg_k), _c(col))
-
-
-def cpc_union(lg_k: int, col) -> Column:
-    return F.call_udf("datasketch_cpc_union", F.lit(lg_k), _c(col))
-
-
-def frequent_items(col) -> Column:
-    return _call("datasketch_frequent_items", col)
-
-
-def bloom(lg_m: int, col) -> Column:
-    return F.call_udf("datasketch_bloom", F.lit(lg_m), _c(col))
-
-
-def bloom_union_agg(lg_m: int, col) -> Column:
-    return F.call_udf("datasketch_bloom_union_agg", F.lit(lg_m), _c(col))
-
-
-def reservoir(k: int, col) -> Column:
-    return F.call_udf("datasketch_reservoir", F.lit(k), _c(col))
-
-
-def reservoir_union_agg(k: int, col) -> Column:
-    return F.call_udf("datasketch_reservoir_union_agg", F.lit(k), _c(col))
-
-
-def aod(lg_k: int, key, values) -> Column:
-    """ArrayOfDoubles tuple AGG: ``values`` is an array<double> column
-    (``F.array(...)``); repeated keys SUM their summaries."""
-    return F.call_udf("datasketch_aod", F.lit(lg_k), _c(key), _c(values))
-
-
-def aod_union_agg(col) -> Column:
-    return F.call_udf("datasketch_aod_union_agg", _c(col))
-
-
-def fdt(lg_k: int, dims) -> Column:
-    """Frequent-Distinct-Tuples AGG: ``dims`` is an array<string>
-    column (``F.array(...)``)."""
-    return F.call_udf("datasketch_fdt", F.lit(lg_k), _c(dims))
-
-
-def fdt_union_agg(lg_k: int, col) -> Column:
-    return F.call_udf("datasketch_fdt_union_agg", F.lit(lg_k), _c(col))
-
-
-def bloomfilter(lg_m: int, col) -> Column:
-    """Apache-wire BloomFilter AGG (cross-system bits; 6 hashes,
-    seed 9001)."""
-    return F.call_udf("datasketch_bloomfilter", F.lit(lg_m), _c(col))
-
-
-def bloomfilter_union_agg(lg_m: int, col) -> Column:
-    return F.call_udf("datasketch_bloomfilter_union_agg", F.lit(lg_m), _c(col))
-
-
-def cms(lg_w: int, col) -> Column:
-    return F.call_udf("datasketch_cms", F.lit(lg_w), _c(col))
-
-
-def cms_union_agg(lg_w: int, col) -> Column:
-    return F.call_udf("datasketch_cms_union_agg", F.lit(lg_w), _c(col))
-
-
-# ---- scalars (generated generically) --------------------------------------
 
 def __getattr__(name: str) -> object:
-    """Any other ``<family>_<fn>`` resolves to its registered UDF --
-    e.g. ``api.theta_estimate(col)``, ``api.kll_quantile(sk, q, inc)``."""
-    udf_name = f"datasketch_{name}"
+    """Every ``<family>[_<fn>]`` resolves to its registered UDF --
+    e.g. ``api.theta(col)``, ``api.theta_estimate(col)``,
+    ``api.kll_quantile(sk, q, inc)``."""
 
     def caller(*args) -> Column:
-        return F.call_udf(
-            udf_name,
-            *[a if isinstance(a, Column) else _c(a) if isinstance(a, str) else F.lit(a) for a in args],
-        )
+        return _call(f"datasketch_{name}", *args)
 
     caller.__name__ = name
     return caller

@@ -639,27 +639,6 @@ def drift_report(
     return drift_report(df_a, df_b, columns, k=k)
 
 
-def media_metadata(df: DataFrame, bin_col: str) -> DataFrame:
-    """Typed metadata struct (n_bytes, magic_hex, checksum) appended
-    for an opaque binary media column — pure JVM expressions, no
-    decode (pipeline/multimodal.binary_metadata)."""
-    from .pipeline.multimodal import binary_metadata
-
-    return df.withColumn(f"{bin_col}_meta", binary_metadata(bin_col))
-
-
-def image_features(
-    df: DataFrame, bin_col: str, id_col: str,
-    n_features: int = 16, strict: bool = False,
-) -> DataFrame:
-    """(id, features) from an image binary column — PIL when
-    installed, else the stdlib BMP/PNG/baseline-JPEG decoder;
-    ``strict=True`` never fabricates (pipeline/multimodal)."""
-    from .pipeline.multimodal import decode_image_features
-
-    return decode_image_features(df, bin_col, id_col, n_features, strict=strict)
-
-
 def video_frames(
     df: DataFrame, bin_col: str, id_col: str,
     every_nth: int = 10, max_frames: int = 4, strict: bool = False,

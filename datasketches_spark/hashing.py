@@ -101,8 +101,3 @@ def hash_values(values, seed: int = 0) -> np.ndarray:
     raw[raw == 0] = 1
     return raw
 
-
-def drop_nulls(series: pd.Series) -> pd.Series:
-    """NULL-skipping identical to the reference's IgnoreNull aggregates."""
-    s = series.dropna()
-    return s

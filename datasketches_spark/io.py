@@ -9,12 +9,9 @@ persists through parquet, and validate blobs against it on load.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sketches import FAMILY_CLASSES as _BYTE_CLASSES
 from .sketches import peek_family
 
 _FAMILY_BYTES = {
@@ -99,13 +96,6 @@ def read_sketch_table(
                     f"family '{info['family']}' but blobs have family byte {fam}"
                 )
     return df
-
-
-def describe_sketch_table(spark: SparkSession, path: str, sketch_col: str = "sketch") -> str:
-    df = read_sketch_table(spark, path, sketch_col, validate=False)
-    info = sketch_column_info(df, sketch_col)
-    n = df.count()
-    return json.dumps({"path": path, "rows": n, "sketch_column": sketch_col, "meta": info})
 
 
 def write_bucketed_sketch_table(

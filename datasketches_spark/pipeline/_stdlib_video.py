@@ -66,16 +66,6 @@ def iter_frame_chunks(blob: bytes) -> Iterator[bytes]:
         pos += 8 + size + (size & 1)
 
 
-def iter_mjpeg_frames(blob: bytes) -> Iterator[np.ndarray]:
-    """Yield decoded grayscale frames (HxW uint8) from an MJPEG AVI.
-    Non-video chunks and undecodable frames are skipped; corruption
-    truncates (see :func:`iter_frame_chunks`)."""
-    for payload in iter_frame_chunks(blob):
-        frame = decode_gray(payload)
-        if frame is not None:
-            yield frame
-
-
 def _walk_movi(blob: bytes, mpos: int, mend: int, depth: int):
     """Yield raw video-chunk payloads from a movi chunk run, recursing
     one level into the AVI-1.0 ``LIST rec `` interleave sublists common

@@ -222,6 +222,9 @@ class EbppsSketch:
         cpy.c = self.c
         cpy.data = list(self.data)
         cpy.partial = self.partial
+        # share the generator: merge() draws on this copy when the
+        # other side is heavier, and a seeded sketch must stay seeded
+        cpy._rng = self._rng
         return cpy
 
     def _internal_merge(self, other: "EbppsSketch") -> None:

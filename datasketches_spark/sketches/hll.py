@@ -55,16 +55,6 @@ _HLL_TGT_6 = 1
 _HLL_TGT_8 = 2
 
 
-def _alpha(m: int) -> float:
-    if m == 16:
-        return 0.673
-    if m == 32:
-        return 0.697
-    if m == 64:
-        return 0.709
-    return 0.7213 / (1.0 + 1.079 / m)
-
-
 _ALPHA_INF = 1.0 / (2.0 * np.log(2.0))
 
 

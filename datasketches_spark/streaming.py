@@ -27,7 +27,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .aggregation import sketch_agg, sketch_merge, sketch_partial
+from .aggregation import sketch_agg, sketch_merge
 
 
 def _value_kind(df: DataFrame, input_col: str) -> "str | None":
@@ -260,7 +260,6 @@ def stateful_sketch_stream(
     watermark: str | None = None,
     event_ttl_ms: int | None = None,
     metric=None,
-    engine: str = "applyInPandas",
 ) -> DataFrame:
     """Per-key incremental sketches INSIDE the streaming engine.
 
@@ -356,61 +355,6 @@ def stateful_sketch_stream(
         raise ValueError(
             "event_ttl_ms requires ts_col/watermark (it is a "
             "watermark-driven timeout)"
-        )
-    if engine not in ("applyInPandas", "transformWithState"):
-        raise ValueError(
-            "engine must be 'applyInPandas' or 'transformWithState', "
-            f"got {engine!r}"
-        )
-    if engine == "transformWithState":
-        # Spark 4.1's transformWithStateInPandas twin (r11 verdict #4):
-        # same contract and output schema; the sketch blob and the
-        # armed-timer timestamp live in SEPARATE state variables (the
-        # multi-variable capability applyInPandasWithState lacks), and
-        # eviction goes through real timers (handleExpiredTimer)
-        # instead of GroupStateTimeout.
-        #
-        # RUNTIME DEPENDENCY: pyspark's TWS state protocol is
-        # protobuf-based (pyspark/sql/streaming/proto/StateMessage_pb2
-        # imports google.protobuf in the TWS driver worker).  Where
-        # protobuf is absent the query would die mid-stream with an
-        # opaque "driver worker exited unexpectedly (crashed)" — fail
-        # fast and name the dependency instead.
-        try:
-            from google.protobuf import descriptor as _pb  # noqa: F401, PLC0415
-        except ImportError as exc:
-            raise NotImplementedError(
-                "engine='transformWithState' requires the protobuf "
-                "package (pyspark's transformWithStateInPandas state "
-                "protocol is protobuf-based) which is not installed; "
-                "use the default engine='applyInPandas'"
-            ) from exc
-        df = stream_df
-        cols = [*group_cols, input_col]
-        if ts_col is not None:
-            df = df.withWatermark(ts_col, watermark)
-            if ts_col not in cols:
-                cols.append(ts_col)
-        proc = _make_tws_processor(
-            family, input_col, group_cols, k, idle_timeout_ms, metric,
-            ts_col=ts_col if event_ttl_ms is not None else None,
-            event_ttl_ms=event_ttl_ms,
-            value_kind=_value_kind(stream_df, input_col),
-        )
-        time_mode = (
-            "EventTime"
-            if ts_col is not None
-            else ("ProcessingTime" if idle_timeout_ms is not None else "None")
-        )
-        return (
-            df.select(*cols)
-            .groupBy(*group_cols)
-            .transformWithStateInPandas(
-                statefulProcessor=proc,
-                outputStructType=out_schema,
-                outputMode=output_mode.capitalize(),
-                timeMode=time_mode,
-            )
         )
     fn = _make_stateful_fn(
         family, input_col, group_cols, k, idle_timeout_ms, metric,
@@ -529,109 +473,6 @@ def _make_stateful_fn(
     return fn
 
 
-def _make_tws_processor(
-    family: str,
-    input_col: str,
-    group_cols: list[str],
-    k: int | None,
-    idle_timeout_ms: int | None,
-    metric=None,
-    ts_col: str | None = None,
-    event_ttl_ms: int | None = None,
-    value_kind: str | None = None,
-):
-    """StatefulProcessor twin of _make_stateful_fn for Spark 4.1's
-    transformWithStateInPandas.  Two state variables: the sketch blob
-    and the currently-armed timer timestamp (timers re-arm per batch,
-    so the stale one must be deleted by value — TWS keeps every
-    registered timer otherwise)."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from .families import FAMILY_CLASSES as _BY_NAME
-    from .families import (
-        build_params,
-        coerce_value_batch,
-        create_sketch,
-        update_sketch,
-    )
-
-    cls = _BY_NAME[family]
-    cols = group_cols + ["sketch", "rows_in_batch"]
-    if metric is not None:
-        cols = cols + [metric[0]]
-
-    def _row(key, blob, nrows, sk):
-        row = list(key) + [blob, nrows]
-        if metric is not None:
-            row.append(float(metric[1](sk)))
-        return row
-
-    class _SketchProcessor(StatefulProcessor):
-        def init(self, handle):
-            self._handle = handle
-            self._state = handle.getValueState("sketch", "sketch binary")
-            self._timer = handle.getValueState("timer_ts", "ts long")
-
-        def _load(self):
-            if self._state.exists():
-                (blob,) = self._state.get()
-                if blob is not None:
-                    return cls.deserialize(bytes(blob))
-            return None
-
-        def _rearm(self, expiry_ms: int) -> None:
-            if self._timer.exists():
-                (old,) = self._timer.get()
-                if old == expiry_ms:
-                    return
-                self._handle.deleteTimer(int(old))
-            self._handle.registerTimer(int(expiry_ms))
-            self._timer.update((int(expiry_ms),))
-
-        def handleInputRows(self, key, rows, timer_values):
-            sk = self._load()
-            nrows = 0
-            max_ts_ms = None
-            for pdf in rows:
-                series = coerce_value_batch(pdf[input_col], value_kind)
-                if sk is None:
-                    sk = create_sketch(family, build_params(family, k, series))
-                update_sketch(family, sk, series)
-                nrows += len(pdf)
-                if ts_col is not None and len(pdf):
-                    m = pdf[ts_col].max()
-                    if pd.notna(m):
-                        ms = int(pd.Timestamp(m).value // 1_000_000)
-                        max_ts_ms = ms if max_ts_ms is None else max(max_ts_ms, ms)
-            if sk is None:
-                return iter(())
-            blob = sk.serialize()
-            self._state.update((blob,))
-            if idle_timeout_ms is not None:
-                self._rearm(
-                    timer_values.getCurrentProcessingTimeInMs() + idle_timeout_ms
-                )
-            elif event_ttl_ms is not None and max_ts_ms is not None:
-                self._rearm(max_ts_ms + event_ttl_ms)
-            return iter([pd.DataFrame([_row(key, blob, nrows, sk)], columns=cols)])
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            sk = self._load()
-            self._state.clear()
-            self._timer.clear()
-            if sk is None:
-                return iter(())
-            return iter(
-                [pd.DataFrame([_row(key, sk.serialize(), -1, sk)], columns=cols)]
-            )
-
-        def close(self):
-            pass
-
-    return _SketchProcessor()
-
-
 def streaming_drift_monitor(
     stream_df: DataFrame,
     input_col: str,
@@ -692,14 +533,6 @@ def streaming_drift_monitor(
         metric=(metric_col, _ks),
     )
     return out if group_cols else out.drop("__all")
-
-
-def store_estimates(
-    spark: SparkSession, store: SketchStore, estimate_fn: str
-) -> DataFrame:
-    """Read a store and decorate it with a scalar estimate column."""
-    df = store.read(spark)
-    return df.withColumn("estimate", F.expr(f"{estimate_fn}({store.sketch_col})"))
 
 
 def streaming_dedup(

@@ -11,6 +11,8 @@ cd "$(dirname "$0")/.."
 # asserts docs/FUNCTIONS.md matches the live registry name-for-name
 python scripts/gen_functions_md.py
 python -m pytest tests/ -q
+# Spark-free: pins the benchmark session's confs to bench.py's
+python -m pytest perfbench/test_perfbench.py -q -p no:cacheprovider
 python scripts/check_oracle.py
 python bench.py
 echo "pairing gate (min-of-3, hard-fails past 1.8x or the 16s floor" \

@@ -132,13 +132,17 @@ def test_inclusion_probability_exact_pps():
 
 def test_merge_preserves_pps_property():
     """Split the stream across two sketches and merge: the light-item
-    inclusion rate must still track k*w/W of the CONCATENATED stream."""
+    inclusion rate must still track C*w/W of the CONCATENATED stream.
+    The heavy item saturates (k*15/W > 1), so the sample size is
+    C = min(k, W/w_max) = 74/15 and a unit-weight item's rate is
+    C/W = 1/15, not k/W."""
     rng = np.random.default_rng(23)
     k = 8
     w_a = np.ones(30)
     w_b = np.concatenate([[15.0], np.ones(29)])
     W = w_a.sum() + w_b.sum()
-    p_light = min(1.0, k / W)
+    w_max = max(w_a.max(), w_b.max())
+    p_light = min(k, W / w_max) / W
     trials = 400
     hits = 0
     for _ in range(trials):

@@ -121,6 +121,51 @@ class TestColumnApi:
         )
         assert row.tw == 10 and row.na == 10
 
+    @pytest.fixture(scope="class")
+    def api_input(self, spark):
+        """Raw values plus one materialized blob per (group, family), so
+        a randomized family's input blobs are the same on both sides."""
+        raw = spark.range(0, 300).selectExpr(
+            "id % 3 AS g", "id AS x", "CAST(id * 0.5 AS DOUBLE) AS y",
+            "array(CAST(id % 7 AS STRING), CAST(id % 5 AS STRING)) AS dims",
+        )
+        blobs = raw.groupBy("g").agg(
+            F.expr("datasketch_cpc(10, x)").alias("cpc"),
+            F.expr("datasketch_bloom(12, x)").alias("bl"),
+            F.expr("datasketch_bloomfilter(12, x)").alias("bf"),
+            F.expr("datasketch_reservoir(64, x)").alias("rs"),
+            F.expr("datasketch_aod(10, x, array(y))").alias("aod"),
+        )
+        return raw, spark.createDataFrame(blobs.collect(), blobs.schema)
+
+    @pytest.mark.parametrize(
+        "name, args, sql, source",
+        [
+            ("cms", (10, "x"), "datasketch_cms(10, x)", "raw"),
+            ("fdt", (10, "dims"), "datasketch_fdt(10, dims)", "raw"),
+            ("cpc_union", (10, "cpc"), "datasketch_cpc_union(10, cpc)", "blobs"),
+            ("bloom_union_agg", (12, "bl"), "datasketch_bloom_union_agg(12, bl)", "blobs"),
+            (
+                "bloomfilter_union_agg", (12, "bf"),
+                "datasketch_bloomfilter_union_agg(12, bf)", "blobs",
+            ),
+            (
+                "reservoir_union_agg", (64, "rs"),
+                "datasketch_reservoir_union_agg(64, rs)", "blobs",
+            ),
+            ("aod_union_agg", ("aod",), "datasketch_aod_union_agg(aod)", "blobs"),
+        ],
+    )
+    def test_getattr_aggregates_match_sql(self, spark, api_input, name, args, sql, source):
+        """Aggregates with no hand-written wrapper resolve through the
+        module ``__getattr__`` to the same UDF the SQL name calls."""
+        raw, blobs = api_input
+        df = raw if source == "raw" else blobs
+        via_api = df.agg(getattr(ds, name)(*args).alias("sk")).first().sk
+        via_sql = df.agg(F.expr(sql).alias("sk")).first().sk
+        assert via_api is not None
+        assert bytes(via_api) == bytes(via_sql)
+
 
 class TestEdgeCasesSQL:
     """Idiom 5: NULL-skipping / extreme values

@@ -805,68 +805,6 @@ def test_stateful_checkpoint_restart_restores_state(spark, tmpdir):
     assert got == {"g0": 45, "g1": 45}
 
 
-def test_tws_engine_state_accumulates(spark, tmpdir):
-    """transformWithStateInPandas twin (r12): same contract as the
-    applyInPandasWithState engine — blobs accumulate across
-    micro-batches, one emission per key per batch.  pyspark's TWS
-    state protocol needs protobuf; without it the twin must FAIL FAST
-    with a clear error (recorded negative result: this container has
-    no protobuf and installs are forbidden, so the twin is
-    import-gated, not oracle-gated)."""
-    import pytest as _pytest
-
-    from datasketches_spark.streaming import stateful_sketch_stream
-
-    dss.register(spark)
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        stream0 = spark.readStream.format("rate").load().selectExpr(
-            "value % 4 AS g", "value AS user_id"
-        )
-        with _pytest.raises(NotImplementedError, match="protobuf"):
-            stateful_sketch_stream(
-                stream0, "user_id", "theta", ["g"], k=14,
-                engine="transformWithState",
-            )
-        return
-    src = f"{tmpdir}/src_tws"
-    spark.range(0, 400).select(
-        (F.col("id") % 4).alias("g"), F.col("id").alias("user_id")
-    ).write.mode("overwrite").parquet(src)
-    spark.range(200, 600).select(
-        (F.col("id") % 4).alias("g"), F.col("id").alias("user_id")
-    ).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("g BIGINT, user_id BIGINT")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = stateful_sketch_stream(
-        stream, "user_id", "theta", ["g"], k=14,
-        metric=("est", lambda sk: sk.get_estimate()),
-        engine="transformWithState",
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_sketches")
-        .outputMode("update")
-        .option("checkpointLocation", f"{tmpdir}/ckpt_tws")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM tws_sketches").collect()
-    assert len(rows) >= 4
-    best = {}
-    for r in rows:
-        est = ThetaSketch.deserialize(bytes(r.sketch)).get_estimate()
-        assert r.est == est  # in-operator metric column agrees
-        best[r.g] = max(best.get(r.g, 0.0), est)
-    assert sum(best.values()) == 600.0
-
-
 def test_simhash_dedup_store_batches(spark, tmpdir):
     """Streaming near-dedup == the one-shot batch rule when rows
     arrive in id order, regardless of batch boundaries: survivors of
