@@ -10,10 +10,13 @@ map-side-combine pattern (SURVEY.md §3):
       of a partition into one partition-local sketch per group key --
       this is the reference's ``Operation`` loop;
   shuffle boundary:            only (group key, serialized sketch blob)
-      rows move -- bounded-size state, exactly the reference's
-      ``Combine`` hand-off but across nodes;
-  phase 2 (reduce):            ``applyInPandas`` merges the few blobs
-      per group -- ``Combine`` + ``Finalize``.
+      rows move, hash-repartitioned by the group key -- bounded-size
+      state, exactly the reference's ``Combine`` hand-off but across
+      nodes;
+  phase 2 (reduce):            hash repartition -> ``mapInPandas`` fold:
+      the same fold as phase 1, merging each arriving batch's blobs
+      into one running sketch per group key -- ``Combine`` +
+      ``Finalize``, with no per-group Arrow frame or sort.
 
 At 100 TB this shuffles kilobytes per (group x input-partition) instead
 of the raw rows, and the map phase is embarrassingly parallel.  The
@@ -45,19 +48,32 @@ from .families import (
 )
 
 
-# accumulate Arrow batches into larger chunks before grouping so the
-# pandas groupby + sketch-update cost is amortized (an Arrow batch is
-# ~10k rows; a chunk is up to 512k) -- bounded memory per task
+# phase 1 accumulates Arrow batches into larger chunks before grouping
+# so the pandas groupby + sketch-update cost is amortized (an Arrow
+# batch is ~10k rows; a chunk is up to 512k) -- bounded memory per task
 _CHUNK_ROWS = 1 << 19
+
+# one NaN object for every NaN group key: NaN != NaN, so NaN keys from
+# different chunks would otherwise each open their own group
+_NAN_KEY = float("nan")
+
+
+def _norm_key(key) -> tuple:
+    key = key if isinstance(key, tuple) else (key,)
+    return tuple(_NAN_KEY if isinstance(v, float) and v != v else v for v in key)
 
 
 def _fold_chunks(
-    batches: Iterator[pd.DataFrame], group_cols: list[str], fold
+    batches: Iterator[pd.DataFrame],
+    group_cols: list[str],
+    fold,
+    chunk_rows: int = _CHUNK_ROWS,
 ) -> dict:
-    """The phase-1 ``Operation`` loop shared by every partial builder:
-    buffer Arrow batches into chunks, split each chunk by group key and
-    fold it into that key's state via ``fold(state_or_None, sub) ->
-    state``.  Returns ``{key tuple: state}`` (``()`` when ungrouped)."""
+    """The ``Operation`` loop shared by every fold: buffer Arrow batches
+    into chunks of at least ``chunk_rows`` rows, split each chunk by
+    group key and fold it into that key's state via ``fold(state_or_None,
+    sub) -> state``.  Returns ``{key tuple: state}`` (``()`` when
+    ungrouped)."""
     acc: dict[tuple, object] = {}
     buf: list[pd.DataFrame] = []
     nbuf = 0
@@ -70,7 +86,7 @@ def _fold_chunks(
         buf, nbuf = [], 0
         if group_cols:
             for key, sub in pdf.groupby(group_cols, dropna=False, sort=False):
-                key = key if isinstance(key, tuple) else (key,)
+                key = _norm_key(key)
                 acc[key] = fold(acc.get(key), sub)
         else:
             acc[()] = fold(acc.get(()), pdf)
@@ -78,7 +94,7 @@ def _fold_chunks(
     for pdf in batches:
         buf.append(pdf)
         nbuf += len(pdf)
-        if nbuf >= _CHUNK_ROWS:
+        if nbuf >= chunk_rows:
             flush()
     flush()
     return acc
@@ -91,15 +107,16 @@ def _map_fold(
     schema: StructType,
     fold,
     emit,
+    chunk_rows: int = _CHUNK_ROWS,
 ) -> DataFrame:
-    """Phase 1 as one ``mapInPandas`` over ``group_cols + value_cols``:
-    fold the partition's rows per group (:func:`_fold_chunks`) and emit
-    one ``key + emit(state)`` row per group -- the only rows that reach
-    the shuffle."""
+    """One ``mapInPandas`` over ``group_cols + value_cols``: fold the
+    partition's rows per group (:func:`_fold_chunks`) and emit one
+    ``key + emit(state)`` row per group.  Phase 1 runs it on the scan's
+    partitions; phase 2 on the hash-repartitioned partials."""
     names = schema.fieldNames()
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = _fold_chunks(batches, group_cols, fold)
+        acc = _fold_chunks(batches, group_cols, fold, chunk_rows)
         if acc:
             rows = [list(key) + emit(state) for key, state in acc.items()]
             yield pd.DataFrame(rows, columns=names)
@@ -189,21 +206,29 @@ def _spec_merge(
         )
     out_names = schema.fieldNames()[len(group_cols):]
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged: dict[str, object] = {}
-        for _col, family, k, out_col in specs:
-            series = pdf[out_col]
-            sk = create_sketch(family, build_params(family, k, series))
-            update_sketch(family, sk, series, merge=True)  # blob series
-            merged[out_col] = sk
-        if finalize is not None:
-            vals = finalize(merged)
-        else:
-            vals = {c: sk.serialize() for c, sk in merged.items()}
-        row = [pdf[c].iloc[0] for c in group_cols] + [vals[n] for n in out_names]
-        return pd.DataFrame([row], columns=group_cols + out_names)
+    def fold(sks, sub: pd.DataFrame):
+        if sks is None:
+            sks = [
+                create_sketch(family, build_params(family, k, sub[out_col]))
+                for _col, family, k, out_col in specs
+            ]
+        for (_col, family, _k, out_col), sk in zip(specs, sks):
+            update_sketch(family, sk, sub[out_col], merge=True)  # blob series
+        return sks
 
-    return partial.groupBy(*group_cols).applyInPandas(merge, schema=schema)
+    def emit(sks) -> list:
+        if finalize is None:
+            return [sk.serialize() for sk in sks]
+        vals = finalize(dict(zip(blob_cols, sks)))
+        return [vals[n] for n in out_names]
+
+    # every row of a group lands in one partition, so a per-batch fold
+    # there sees all of the group's blobs; chunk_rows=1 folds each
+    # batch as it arrives instead of buffering blob rows
+    parted = (
+        partial.repartition(*group_cols) if group_cols else partial.repartition(1)
+    )
+    return _map_fold(parted, group_cols, blob_cols, schema, fold, emit, chunk_rows=1)
 
 
 def sketch_partial(

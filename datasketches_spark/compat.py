@@ -9,12 +9,12 @@ the library degrades gracefully under Connect instead of dying on an
 AttributeError three frames deep.
 
 What works WITHOUT the JVM bridge (the whole hot path): ``register()``
-(spark.udf.register), the two-phase scale path (mapInPandas /
-applyInPandas), every SQL/Column function, io wire tables, streaming
-foreachBatch.  What the helpers shim: planner size statistics (used
-only as OPTIMIZATION gates — fallbacks pick the safe branch), task
-broadcasts (fall back to closure capture), filesystem probes, and the
-JVM-native bloom build (falls back to the portable Python engine).
+(spark.udf.register), the two-phase scale path (mapInPandas), every
+SQL/Column function, io wire tables, streaming foreachBatch.  What the
+helpers shim: planner size statistics (used only as OPTIMIZATION
+gates — fallbacks pick the safe branch), task broadcasts (fall back to
+closure capture), filesystem probes, and the JVM-native bloom build
+(falls back to the portable Python engine).
 """
 
 from __future__ import annotations

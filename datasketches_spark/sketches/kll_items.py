@@ -74,6 +74,9 @@ class KllItemsSketch(KllSketch):
 
     # -- building -------------------------------------------------------
     def update(self, values) -> None:
+        """Add string items.  Everything ``pd.isna`` flags (``None``,
+        ``np.nan``, ``pd.NA``, ``pd.NaT``) is dropped; any other
+        non-string value (``5``, ``1.5``, ``b"x"``) raises ValueError."""
         arr = np.asarray(values, dtype=object).ravel()
         if not arr.size:
             return

@@ -7,6 +7,10 @@
 # round.
 set -e
 cd "$(dirname "$0")/.."
+# the same core count and scratch dir as the Tier-1 command: bench.py
+# and the pairing gate otherwise default to local[32] on any host
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
+export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
 # regenerate the SQL-function inventory doc first: the test suite
 # asserts docs/FUNCTIONS.md matches the live registry name-for-name
 python scripts/gen_functions_md.py

@@ -1,4 +1,4 @@
-"""Spark-free checks of the phase-1 chunk loop (aggregation._fold_chunks).
+"""Spark-free checks of the chunk loop (aggregation._fold_chunks).
 
 Every partial builder folds its Arrow batches through one loop that
 buffers them into ``_CHUNK_ROWS`` chunks and splits each chunk by group
@@ -6,11 +6,15 @@ key.  These tests feed more than two chunks of ~10k-row batches over
 three groups, with one batch whose BIGINT value column arrives float64
 with NULLs (how Arrow hands pandas a null-bearing integral batch), so
 that batch's chunk concatenates to float64 as a whole.
+
+The phase-2 merge runs the same loop but folds every blob batch as it
+arrives; the last test drives its ``mapInPandas`` function directly.
 """
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from datasketches_spark import aggregation as agg
 from datasketches_spark.families import build_params, create_sketch, update_sketch
@@ -90,3 +94,67 @@ def test_chunked_blobs_equal_one_unchunked_build(batches):
             direct = create_sketch(fam, build_params(fam, k, vals))
             update_sketch(fam, direct, vals)
             assert sk.serialize() == direct.serialize(), (g, fam)
+
+
+class _Partial:
+    """Stands in for the phase-1 DataFrame: records the function phase 2
+    hands to ``mapInPandas`` instead of planning a Spark job."""
+
+    def __init__(self, schema: StructType):
+        self.schema = schema
+        self.fn = None
+
+    def repartition(self, *cols):
+        return self
+
+    def select(self, *cols):
+        return self
+
+    def mapInPandas(self, fn, schema):
+        self.fn = fn
+        return self
+
+
+def test_merge_folds_each_blob_batch_as_it_arrives(monkeypatch):
+    rng = np.random.default_rng(5)
+    fams = [("theta", 12), ("kll", 200)]
+    specs = [(fam, fam, k, fam) for fam, k in fams]
+    # 5 groups x 12 partials, interleaved as a shuffle read would
+    # deliver them, in 8-row batches: every batch spans several groups
+    # and every group spans several batches
+    rows = []
+    for part in range(12):
+        for g in range(5):
+            vals = pd.Series(rng.integers(0, 5000, 300, dtype=np.int64))
+            blobs = []
+            for fam, k in fams:
+                sk = create_sketch(fam, build_params(fam, k, vals))
+                update_sketch(fam, sk, vals)
+                blobs.append(sk.serialize())
+            rows.append([g] + blobs)
+    names = ["g"] + [fam for fam, _k in fams]
+    whole = pd.DataFrame(rows, columns=names)
+    batches = [whole.iloc[i:i + 8].reset_index(drop=True) for i in range(0, len(whole), 8)]
+
+    partial = _Partial(StructType(
+        [StructField("g", LongType())]
+        + [StructField(fam, BinaryType()) for fam, _k in fams]
+    ))
+    assert agg._spec_merge(partial, specs, ["g"]) is partial
+
+    concats = []
+    real_concat = pd.concat
+    monkeypatch.setattr(
+        agg.pd, "concat", lambda objs, **kw: concats.append(objs) or real_concat(objs, **kw)
+    )
+    out = list(partial.fn(iter(batches)))
+    monkeypatch.undo()
+    assert concats == [], "phase 2 concatenated blob batches"
+    assert len(out) == 1 and sorted(out[0]["g"]) == list(range(5))
+    for _, row in out[0].iterrows():
+        sub = whole[whole["g"] == row["g"]]
+        assert sum(g == row["g"] for b in batches for g in b["g"].unique()) > 1
+        for _col, fam, k, out_col in specs:
+            direct = create_sketch(fam, build_params(fam, k, sub[out_col]))
+            update_sketch(fam, direct, sub[out_col], merge=True)
+            assert row[out_col] == direct.serialize(), (row["g"], fam)

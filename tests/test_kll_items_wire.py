@@ -38,6 +38,20 @@ def test_none_and_nan_dropped_numeric_rejected():
         sk.get_rank(3.5)
 
 
+def test_null_semantics_pinned():
+    """Every pd.isna null kind is dropped; every non-null non-string
+    value raises."""
+    import pandas as pd
+
+    sk = KllItemsSketch(20)
+    sk.update(["x", None, np.nan, pd.NA, pd.NaT, "y"])
+    assert sk.n == 2
+    for bad in (5, 1.5, b"x"):
+        with pytest.raises(ValueError, match="VARCHAR"):
+            sk.update(["z", bad])
+    assert sk.n == 2
+
+
 def test_dsks_roundtrip_exact_and_estimation():
     for n in (0, 1, 4, 500):
         sk = KllItemsSketch(20)

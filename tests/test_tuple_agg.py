@@ -117,13 +117,20 @@ def test_plan_blob_only_shuffle(spark, tdf):
     hash exchange; only (group, blob) rows shuffle."""
     df = tuple_sketch_agg(tdf, "key", ["v1", "v2"], group_cols=["g"], lg_k=12)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    m_map = re.search(r"MapInPandas", plan)
-    m_ex = re.search(r"Exchange hashpartitioning", plan)
-    assert m_map and m_ex, plan
-    # parents print above children: the exchange sits ABOVE phase 1
-    assert m_ex.start() < m_map.start(), plan
+    lines = plan.splitlines()
+    # phase 1 is the MapInPandas that reads the raw ``key`` column; the
+    # phase-2 MapInPandas above the exchange reads only (g, sketch)
+    phase1 = [
+        i for i, ln in enumerate(lines)
+        if re.search(r"MapInPandas \w+\([^)]*\bkey#", ln)
+    ]
+    assert len(phase1) == 1, plan
+    # parents print above children: exactly one hash exchange sits
+    # ABOVE phase 1
+    above = [ln for ln in lines[: phase1[0]] if "Exchange hashpartitioning" in ln]
+    assert len(above) == 1, plan
     # nothing shuffles below phase 1
-    assert "Exchange" not in plan[m_map.start():], plan
+    assert not any("Exchange" in ln for ln in lines[phase1[0] + 1:]), plan
 
 
 def test_merge_blobs_via_union_agg(spark, tdf):
