@@ -8,7 +8,10 @@ map-side-combine pattern (SURVEY.md §3):
 
   phase 1 (map, no shuffle):   ``mapInPandas`` folds every Arrow batch
       of a partition into one partition-local sketch per group key --
-      this is the reference's ``Operation`` loop;
+      this is the reference's ``Operation`` loop.  The fold takes row
+      positions per group, columns prepared once per chunk: NULL mask,
+      int64 restore and blob sniffing run per column, and each group's
+      update is a numpy slice of the prepared column;
   shuffle boundary:            only (group key, serialized sketch blob)
       rows move, hash-repartitioned by the group key -- bounded-size
       state, exactly the reference's ``Combine`` hand-off but across
@@ -29,6 +32,7 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -41,10 +45,10 @@ from pyspark.sql.types import (
 
 from .families import (
     build_params,
-    coerce_value_batch,
     create_sketch,
+    prepare_column,
     spark_value_kind,
-    update_sketch,
+    update_rows,
 )
 
 
@@ -60,19 +64,24 @@ _NAN_KEY = float("nan")
 
 def _norm_key(key) -> tuple:
     key = key if isinstance(key, tuple) else (key,)
-    return tuple(_NAN_KEY if isinstance(v, float) and v != v else v for v in key)
+    return tuple(
+        _NAN_KEY if isinstance(v, (float, np.floating)) and v != v else v for v in key
+    )
 
 
 def _fold_chunks(
     batches: Iterator[pd.DataFrame],
     group_cols: list[str],
+    prepare,
     fold,
     chunk_rows: int = _CHUNK_ROWS,
 ) -> dict:
     """The ``Operation`` loop shared by every fold: buffer Arrow batches
-    into chunks of at least ``chunk_rows`` rows, split each chunk by
-    group key and fold it into that key's state via ``fold(state_or_None,
-    sub) -> state``.  Returns ``{key tuple: state}`` (``()`` when
+    into chunks of at least ``chunk_rows`` rows, prepare each chunk's
+    columns once (``prepare(pdf) -> cols``), split the chunk into each
+    group key's row positions and fold them into that key's state via
+    ``fold(state_or_None, cols, pos) -> state`` (``pos`` is None when
+    ungrouped: every row).  Returns ``{key tuple: state}`` (``()`` when
     ungrouped)."""
     acc: dict[tuple, object] = {}
     buf: list[pd.DataFrame] = []
@@ -84,12 +93,16 @@ def _fold_chunks(
             return
         pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
         buf, nbuf = [], 0
+        cols = prepare(pdf)
         if group_cols:
-            for key, sub in pdf.groupby(group_cols, dropna=False, sort=False):
+            groups = pdf.groupby(group_cols, dropna=False, sort=False).indices
+            # first-appearance order, as iterating the groupby gives (the
+            # dict orders multi-column keys by code): it is the emit order
+            for key, pos in sorted(groups.items(), key=lambda kv: kv[1][0]):
                 key = _norm_key(key)
-                acc[key] = fold(acc.get(key), sub)
+                acc[key] = fold(acc.get(key), cols, pos)
         else:
-            acc[()] = fold(acc.get(()), pdf)
+            acc[()] = fold(acc.get(()), cols, None)
 
     for pdf in batches:
         buf.append(pdf)
@@ -105,6 +118,7 @@ def _map_fold(
     group_cols: list[str],
     value_cols: list[str],
     schema: StructType,
+    prepare,
     fold,
     emit,
     chunk_rows: int = _CHUNK_ROWS,
@@ -116,7 +130,7 @@ def _map_fold(
     names = schema.fieldNames()
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = _fold_chunks(batches, group_cols, fold, chunk_rows)
+        acc = _fold_chunks(batches, group_cols, prepare, fold, chunk_rows)
         if acc:
             rows = [list(key) + emit(state) for key, state in acc.items()]
             yield pd.DataFrame(rows, columns=names)
@@ -124,30 +138,42 @@ def _map_fold(
     return df.select(*group_cols, *value_cols).mapInPandas(build, schema=schema)
 
 
-def _spec_fold(specs: list[tuple], kinds: list, weight_col: str | None = None):
-    """Fold callback building one sketch per ``(input_col, family, k,
-    output_col)`` spec; the state is the list of sketches.  ``kinds``
-    are the specs' Spark-side value kinds: a null-bearing Arrow batch
-    of an integral column arrives float64 and must be coerced back (5
-    and 5.0 hash differently -- families.coerce_value_batch)."""
+def _spec_fold(
+    specs: list[tuple],
+    kinds: list | None = None,
+    weight_col: str | None = None,
+    merge: bool = False,
+):
+    """``(prepare, fold)`` building one sketch per ``(input_col, family,
+    k, output_col)`` spec from ``input_col`` values, or with ``merge``
+    merging ``output_col`` blobs; the state is the list of sketches.
+    ``kinds`` are the specs' Spark-side value kinds: a null-bearing
+    Arrow batch of an integral column arrives float64 and must be
+    coerced back (5 and 5.0 hash differently -- families.prepare_column)."""
+    kinds = kinds or [None] * len(specs)
 
-    def fold(sks, sub: pd.DataFrame):
+    def prepare(pdf: pd.DataFrame):
+        w = None if weight_col is None else pdf[weight_col]
+        cols = [
+            prepare_column(family, pdf[out if merge else col], kind, w, merge)
+            for (col, family, _k, out), kind in zip(specs, kinds)
+        ]
+        # a group's sketch takes its params from the first batch it is in
+        params = [
+            build_params(family, k, c.head())
+            for (_col, family, k, _out), c in zip(specs, cols)
+        ]
+        return cols, params
+
+    def fold(sks, prepared, pos):
+        cols, params = prepared
         if sks is None:
-            sks = [None] * len(specs)
-        for i, (col, family, k, _out) in enumerate(specs):
-            if weight_col is not None:
-                series, w = coerce_value_batch(sub[col], kinds[i], sub[weight_col])
-            else:
-                series = coerce_value_batch(sub[col], kinds[i])
-            if sks[i] is None:
-                sks[i] = create_sketch(family, build_params(family, k, series))
-            if weight_col is not None:
-                sks[i].update_series(series, weights=w)
-            else:
-                update_sketch(family, sks[i], series)
+            sks = [create_sketch(s[1], p) for s, p in zip(specs, params)]
+        for s, sk, c in zip(specs, sks, cols):
+            update_rows(s[1], sk, c, pos)
         return sks
 
-    return fold
+    return prepare, fold
 
 
 def _blob_schema(
@@ -174,7 +200,7 @@ def _spec_partial(
         group_cols,
         list(dict.fromkeys(in_cols)),  # stable unique
         _blob_schema(df, group_cols, [s[3] for s in specs]),
-        _spec_fold(specs, kinds, weight_col),
+        *_spec_fold(specs, kinds, weight_col),
         lambda sks: [sk.serialize() for sk in sks],
     )
 
@@ -206,16 +232,6 @@ def _spec_merge(
         )
     out_names = schema.fieldNames()[len(group_cols):]
 
-    def fold(sks, sub: pd.DataFrame):
-        if sks is None:
-            sks = [
-                create_sketch(family, build_params(family, k, sub[out_col]))
-                for _col, family, k, out_col in specs
-            ]
-        for (_col, family, _k, out_col), sk in zip(specs, sks):
-            update_sketch(family, sk, sub[out_col], merge=True)  # blob series
-        return sks
-
     def emit(sks) -> list:
         if finalize is None:
             return [sk.serialize() for sk in sks]
@@ -228,7 +244,10 @@ def _spec_merge(
     parted = (
         partial.repartition(*group_cols) if group_cols else partial.repartition(1)
     )
-    return _map_fold(parted, group_cols, blob_cols, schema, fold, emit, chunk_rows=1)
+    prepare, fold = _spec_fold(specs, merge=True)
+    return _map_fold(
+        parted, group_cols, blob_cols, schema, prepare, fold, emit, chunk_rows=1
+    )
 
 
 def sketch_partial(
@@ -367,13 +386,18 @@ def tuple_sketch_partial(
     lgk = lg_k if lg_k is not None else DEFAULT_LG_K
     key_kind = spark_value_kind(df.schema[key_col].dataType)
 
-    def fold(sk, sub: pd.DataFrame):
+    def prepare(pdf: pd.DataFrame):
+        keys = prepare_column("aod", pdf[key_col], key_kind)
+        return keys, pdf[value_cols].to_numpy(dtype="float64", na_value=0.0)
+
+    def fold(sk, prepared, pos):
         if sk is None:
             sk = AodSketch(lgk, len(value_cols))
         # NULL keys are dropped (update_batch skips them anyway) with
         # their summary rows, so a nullable-int key hashes as int64
-        keys, vals = coerce_value_batch(sub[key_col], key_kind, sub[value_cols])
-        sk.update_batch(keys, vals.to_numpy(dtype="float64", na_value=0.0))
+        keys, vals = prepared
+        r = keys.rows(pos)
+        sk.update_batch(keys.values[r], vals[r])
         return sk
 
     return _map_fold(
@@ -381,6 +405,7 @@ def tuple_sketch_partial(
         group_cols,
         [key_col] + value_cols,
         _blob_schema(df, group_cols, [output_col]),
+        prepare,
         fold,
         lambda sk: [sk.serialize()],
     )
@@ -482,10 +507,13 @@ def theta_partial_state(
     )
     kind = spark_value_kind(df.schema[input_col].dataType)
 
-    def fold(sk, sub: pd.DataFrame):
+    def prepare(pdf: pd.DataFrame):
+        return prepare_column("theta", pdf[input_col], kind)
+
+    def fold(sk, col, pos):
         if sk is None:
             sk = ThetaSketch(lg_k)
-        sk.update_values(coerce_value_batch(sub[input_col].dropna(), kind))
+        sk.update_values(col.values[col.rows(pos)])  # raw values, blobs too
         return sk
 
     def emit(sk) -> list:
@@ -495,7 +523,7 @@ def theta_partial_state(
             None if sk.theta == MAX_HASH else int(sk.theta),
         ]
 
-    return _map_fold(df, group_cols, [input_col], schema, fold, emit)
+    return _map_fold(df, group_cols, [input_col], schema, prepare, fold, emit)
 
 
 def _theta_survivors(k: int, hashes_col: str = "__h", theta_col: str = "__th"):

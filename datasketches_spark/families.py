@@ -159,72 +159,137 @@ def is_blob_series(series: pd.Series) -> bool:
     return False
 
 
-def update_sketch(family: str, sk, series: pd.Series, merge: bool = False) -> None:
-    """Feed one Arrow batch into a sketch: values build, blobs merge.
+class PreparedColumn:
+    """One batch column with the column-level work of :func:`update_sketch`
+    done once, so that each group's update is a numpy slice
+    (:func:`update_rows`): the NULL mask, integral values restored to
+    int64, blob detection, the HLL/CPC framed-vs-raw-BLOB sniff and the
+    quantile VARCHAR rejection.
 
-    ``merge=True`` declares the series is sketch blobs even when every
-    value is NULL (an all-NULL series carries no type evidence).  Only
-    the stats family needs the hint: every other family drops NULLs
-    before doing anything, but stats counts NULLs on its *build* path,
-    so an all-NULL blob series would otherwise be miscounted as rows.
+    ``values`` stays row-aligned with the batch (a restored NULL row
+    holds 0), ``keep`` masks the non-NULL rows (None when every row is
+    one), and ``dropped`` records that NULL rows were dropped as
+    :func:`coerce_value_batch` drops them, so stats does not count them.
     """
-    s = series.dropna()
-    if family == "stats":
+
+    __slots__ = ("values", "keep", "kept", "dropped", "weights", "blobs", "framed")
+
+    def rows(self, pos=None):
+        """Positions of the non-NULL rows among ``pos`` (every row when
+        None), ready to index ``values``."""
+        if self.keep is None:
+            return slice(None) if pos is None else pos
+        return self.kept if pos is None else pos[self.keep[pos]]
+
+    def head(self) -> pd.Series:
+        """The first non-NULL value (else the first row) as a one-row
+        Series: all :func:`build_params` reads of a batch."""
+        i = int(self.kept[0]) if self.keep is not None and self.kept.size else 0
+        return pd.Series(self.values[i : i + 1])
+
+
+def prepare_column(
+    family: str,
+    series: pd.Series,
+    kind: "str | None" = None,
+    weights: "pd.Series | None" = None,
+    merge: bool = False,
+) -> PreparedColumn:
+    """Column-level half of :func:`update_sketch`, run once per batch
+    column.  ``kind`` is the Spark-side value kind
+    (:func:`spark_value_kind`), ``weights`` the sampling families' row
+    weights and ``merge`` the blob hint of :func:`update_sketch`."""
+    col = PreparedColumn()
+    keep = series.notna().to_numpy()
+    col.dropped = kind == "int64" and series.dtype.kind == "f"
+    if col.dropped:
+        values = series.to_numpy(dtype=np.int64, na_value=0)
+    else:
+        values = series.to_numpy()
+    col.values = values
+    if keep.all():
+        col.keep = None
+        col.kept = None
+        first = values[0] if len(values) else None
+    else:
+        col.keep = keep
+        col.kept = np.flatnonzero(keep)
+        first = values[col.kept[0]] if col.kept.size else None
+    col.weights = None if weights is None else weights.to_numpy()
+    col.blobs = merge or (
+        values.dtype == object and isinstance(first, (bytes, bytearray))
+    )
+    col.framed = None
+    if col.blobs and family in ("hll", "cpc") and first is not None:
+        # Reference parity: HLL/CPC accept raw BLOB *values* in
+        # addition to sketch blobs (generator.py:30-44 lists BLOB
+        # among the allowed input types). Spark has no catalog type
+        # alias to distinguish sketch_hll from plain BINARY, so
+        # dispatch per value on the DSKS frame magic OR the Apache
+        # wire preamble (serVer/family/lgK — the reference's typed
+        # blobs ARE that format): sketch blobs merge, anything
+        # else is hashed as a raw byte value.
+        sniff = FAMILY_CLASSES[family].sniff_wire
+        col.framed = np.zeros(len(values), dtype=bool)
+        pos = col.rows()
+        col.framed[pos] = [
+            is_framed(b) or sniff(bytes(b)) for b in values[pos]
+        ]
+    if (
+        (family in QUANTILE_FAMILIES or family == "tdigest")
+        and not col.blobs
+        and values.dtype == object
+        and isinstance(first, str)
+    ):
+        # The reference binds numeric overloads only for the
+        # quantile families (codegen/generator.py:46-60); mirror
+        # DuckDB's binder rejection instead of a numpy cast error.
+        raise ValueError(
+            "No function matches the given name and argument types "
+            f"'datasketch_{family}(VARCHAR)': "
+            f"{family} sketches accept numeric values only. "
+            "You might need to add explicit type casts."
+        )
+    return col
+
+
+def update_rows(family: str, sk, col: PreparedColumn, pos=None) -> None:
+    """Row-level half of :func:`update_sketch`: feed the rows ``pos``
+    (positions into the batch; every row when None) of a prepared
+    column into ``sk`` -- values build, blobs deserialize and merge."""
+    if family == "stats" and not col.blobs:
         # stats is the one family that must SEE the NULLs (its null
-        # count is n - nonnull); blobs still merge like everywhere else
-        if is_blob_series(s) or merge:
-            for blob in s:
-                sk.merge(StatsSketch.deserialize(bytes(blob)))
-        else:
-            sk.update_series(series)
+        # count is n - nonnull), except the ones the int64 restore drops
+        r = col.rows(pos) if col.dropped else (slice(None) if pos is None else pos)
+        sk.update_series(pd.Series(col.values[r]))
         return
-    if s.empty:
+    r = col.rows(pos)
+    if col.weights is not None:
+        # every call, even with no rows: a weighted update switches the
+        # sample to weighted mode
+        sk.update_series(pd.Series(col.values[r]), weights=pd.Series(col.weights[r]))
         return
-    cls = FAMILY_CLASSES[family]
-    if is_blob_series(s):
-        if family in ("hll", "cpc"):
-            # Reference parity: HLL/CPC accept raw BLOB *values* in
-            # addition to sketch blobs (generator.py:30-44 lists BLOB
-            # among the allowed input types). Spark has no catalog type
-            # alias to distinguish sketch_hll from plain BINARY, so
-            # dispatch per value on the DSKS frame magic OR the Apache
-            # wire preamble (serVer/family/lgK — the reference's typed
-            # blobs ARE that format): sketch blobs merge, anything
-            # else is hashed as a raw byte value.
-            framed = s.map(
-                lambda b: b is not None
-                and (is_framed(b) or cls.sniff_wire(bytes(b)))
-            )
-            for blob in s[framed]:
+    vals = col.values[r]
+    if not len(vals):
+        return
+    if col.blobs:
+        cls = FAMILY_CLASSES[family]
+        if col.framed is None:
+            for blob in vals:
                 sk.merge(cls.deserialize(bytes(blob)))
-            raw = s[~framed].dropna()
-            if not raw.empty:
-                sk.update_values(raw.map(bytes))
             return
-        for blob in s:
-            if blob is not None:
-                sk.merge(cls.deserialize(bytes(blob)))
+        framed = col.framed[r]
+        for blob in vals[framed]:
+            sk.merge(cls.deserialize(bytes(blob)))
+        if not framed.all():
+            sk.update_values(pd.Series([bytes(b) for b in vals[~framed]], dtype=object))
         return
     if family in ("theta", "hll", "cpc", "bloom"):
-        sk.update_values(s)
-    elif family == "bloomfilter":
-        sk.update_series(s)
-    elif family in QUANTILE_FAMILIES or family == "tdigest":
-        if s.dtype == object and isinstance(
-            next((v for v in s if v is not None), None), str
-        ):
-            # The reference binds numeric overloads only for the
-            # quantile families (codegen/generator.py:46-60); mirror
-            # DuckDB's binder rejection instead of a numpy cast error.
-            raise ValueError(
-                "No function matches the given name and argument types "
-                f"'datasketch_{family}(VARCHAR)': "
-                f"{family} sketches accept numeric values only. "
-                "You might need to add explicit type casts."
-            )
-        sk.update(s.to_numpy())
-    elif family in ("frequent_items", "reservoir", "cms", "ebpps", "fdt", "kll_items"):
-        sk.update_series(s)
+        sk.update_values(vals)
+    elif family in QUANTILE_FAMILIES or family in ("tdigest", "kll_items"):
+        sk.update(vals)
+    elif family in ("frequent_items", "reservoir", "cms", "ebpps", "fdt", "bloomfilter"):
+        sk.update_series(pd.Series(vals))
     elif family == "aod":
         raise ValueError(
             "datasketch_aod builds from (key, values) pairs — use "
@@ -233,6 +298,20 @@ def update_sketch(family: str, sk, series: pd.Series, merge: bool = False) -> No
         )
     else:  # pragma: no cover
         raise ValueError(f"unknown sketch family: {family}")
+
+
+def update_sketch(family: str, sk, series: pd.Series, merge: bool = False) -> None:
+    """Feed one Arrow batch into a sketch: values build, blobs merge.
+
+    ``merge=True`` declares the series is sketch blobs even when every
+    value is NULL (an all-NULL series carries no type evidence).  Only
+    the stats family needs the hint: every other family drops NULLs
+    before doing anything, but stats counts NULLs on its *build* path,
+    so an all-NULL blob series would otherwise be miscounted as rows.
+    The composition of :func:`prepare_column` and :func:`update_rows`,
+    which the grouped folds call once per batch and once per group.
+    """
+    update_rows(family, sk, prepare_column(family, series, merge=merge))
 
 
 def build_params(family: str, k: int | None, series: pd.Series | None) -> dict:

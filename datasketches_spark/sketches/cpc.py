@@ -337,7 +337,11 @@ class CpcSketch:
                 + self.sparse.tobytes()
                 + self.sparse_coupons.tobytes()
             )
-            return frame(FAMILY_CPC, zlib.compress(payload, 6))
+            # the payload is random 64-bit hashes, so LZ77 matching finds
+            # nothing: Huffman-only deflate is ~3x faster at the same
+            # ratio, and the stream is still standard zlib for deserialize
+            z = zlib.compressobj(6, zlib.DEFLATED, 15, 8, zlib.Z_HUFFMAN_ONLY)
+            return frame(FAMILY_CPC, z.compress(payload) + z.flush())
         # choose the window offset minimizing exceptions: bits set above
         # the window plus bits UNSET below it (both are "surprises")
         u8 = np.unpackbits(

@@ -34,6 +34,9 @@ from .base import FAMILY_FREQUENT_ITEMS, SketchDeserializeError, frame, unframe
 
 DEFAULT_LG_MAX_K = 10  # src/frequent_items_sketch.cpp:25,38
 _LOAD_FACTOR = 0.75
+# framed-codec item header: utf-8 length (uint32) + count (int64)
+_ITEM_HEAD = struct.Struct("<Iq")
+_ITEM_HEAD_SIZE = 12
 
 # Apache DataSketches frequent-items wire format (family 10, serVer 1)
 # with ArrayOfStringsSerDe items — the reference's FI blobs ARE this
@@ -183,10 +186,11 @@ class FrequentItemsSketch:
         parts = [
             struct.pack("<BQQI", self.lg_max_k, self.offset, self.stream_weight, len(self.counts))
         ]
+        pack, append = _ITEM_HEAD.pack, parts.append
         for item, c in self.counts.items():
             b = item.encode("utf-8")
-            parts.append(struct.pack("<Iq", len(b), c))
-            parts.append(b)
+            append(pack(len(b), c))
+            append(b)
         return frame(FAMILY_FREQUENT_ITEMS, b"".join(parts))
 
     # ---- Apache DataSketches wire format (items sketch, strings) ----
@@ -288,12 +292,12 @@ class FrequentItemsSketch:
             sk = cls(lg_max_k)
             sk.offset = offset
             sk.stream_weight = stream_weight
+            unpack_from, counts = _ITEM_HEAD.unpack_from, sk.counts
             for _ in range(count):
-                blen, c = struct.unpack_from("<Iq", payload, off)
-                off += struct.calcsize("<Iq")
-                item = payload[off : off + blen].decode("utf-8")
+                blen, c = unpack_from(payload, off)
+                off += _ITEM_HEAD_SIZE
+                counts[payload[off : off + blen].decode("utf-8")] = c
                 off += blen
-                sk.counts[item] = c
             return sk
         except (struct.error, ValueError, UnicodeDecodeError) as exc:
             raise SketchDeserializeError(

@@ -1,8 +1,8 @@
 """Spark-free checks of the chunk loop (aggregation._fold_chunks).
 
 Every partial builder folds its Arrow batches through one loop that
-buffers them into ``_CHUNK_ROWS`` chunks and splits each chunk by group
-key.  These tests feed more than two chunks of ~10k-row batches over
+buffers them into ``_CHUNK_ROWS`` chunks, prepares each chunk's columns
+once and hands every group key its row positions.  These tests feed more than two chunks of ~10k-row batches over
 three groups, with one batch whose BIGINT value column arrives float64
 with NULLs (how Arrow hands pandas a null-bearing integral batch), so
 that batch's chunk concatenates to float64 as a whole.
@@ -57,12 +57,16 @@ def test_input_spans_more_than_two_chunks(batches):
 def test_each_group_folds_exactly_its_rows(batches):
     calls = []
 
-    def fold(state, sub):
-        calls.append(len(sub))
-        assert sub["g"].nunique() == 1
-        return (state or []) + [sub["id"].to_numpy()]
+    def prepare(pdf):
+        return pdf["g"].to_numpy(), pdf["id"].to_numpy()
 
-    acc = agg._fold_chunks(iter(batches), ["g"], fold)
+    def fold(state, cols, pos):
+        g, ids = cols
+        calls.append(len(pos))
+        assert len(np.unique(g[pos])) == 1
+        return (state or []) + [ids[pos]]
+
+    acc = agg._fold_chunks(iter(batches), ["g"], prepare, fold)
     whole = pd.concat(batches, ignore_index=True)
     batches_per_chunk = -(-agg._CHUNK_ROWS // BATCH_ROWS)
     n_chunks = -(-N_BATCHES // batches_per_chunk)
@@ -78,14 +82,17 @@ def test_each_group_folds_exactly_its_rows(batches):
 
 
 def test_ungrouped_fold_sees_every_row(batches):
-    acc = agg._fold_chunks(iter(batches), [], lambda n, sub: (n or 0) + len(sub))
+    def fold(n, rows, pos):
+        assert pos is None  # ungrouped: every row of the chunk
+        return (n or 0) + rows
+
+    acc = agg._fold_chunks(iter(batches), [], len, fold)
     assert acc == {(): sum(map(len, batches))}
 
 
 def test_chunked_blobs_equal_one_unchunked_build(batches):
     specs = [("v", fam, k, fam) for fam, k in ORDER_FREE]
-    fold = agg._spec_fold(specs, ["int64"] * len(specs))
-    acc = agg._fold_chunks(iter(batches), ["g"], fold)
+    acc = agg._fold_chunks(iter(batches), ["g"], *agg._spec_fold(specs, ["int64"] * len(specs)))
     whole = pd.concat(batches, ignore_index=True)
     for (g,), sks in acc.items():
         # NULLs dropped and int64 restored: 5 and 5.0 hash differently

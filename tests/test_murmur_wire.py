@@ -242,15 +242,20 @@ def test_live_jvm_reads_our_estimation_blob(jvm_theta):
     are one py4j round trip EACH (60k updates cost ~60s of suite
     time) — the property under test is java READING our estimation
     blob, not java's own build throughput.  The overlap range still
-    exercises cross-sketch hash dedup below our theta."""
+    exercises cross-sketch hash dedup below our theta.  At lg_k=5 the
+    java side's 2,000 values put its own blob in estimation mode too,
+    so the union folds two estimation-mode sketches with different
+    thetas for the same py4j update count."""
     jvm, build = jvm_theta
     ours = _build(list(range(60_000))).to_wire()
     mem = jvm.org.apache.datasketches.memory.Memory.wrap(ours)
     u = jvm.org.apache.datasketches.theta.SetOperation.builder().buildUnion()
     u.union(jvm.org.apache.datasketches.theta.CompactSketch.wrap(mem))
-    other = build(list(range(59_000, 61_000)))
+    other = build(list(range(59_000, 61_000)), lg_k=5)
     omem = jvm.org.apache.datasketches.memory.Memory.wrap(other)
-    u.union(jvm.org.apache.datasketches.theta.CompactSketch.wrap(omem))
+    theirs = jvm.org.apache.datasketches.theta.CompactSketch.wrap(omem)
+    assert theirs.isEstimationMode()
+    u.union(theirs)
     est = u.getResult().getEstimate()
     assert est == pytest.approx(61_000, rel=0.05)
 

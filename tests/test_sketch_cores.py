@@ -307,6 +307,47 @@ def test_cpc_smaller_than_hll():
     assert len(c.serialize()) < len(h.serialize())
 
 
+def _cpc_stream(blob: bytes) -> bytes:
+    from datasketches_spark.sketches.base import FAMILY_CPC, unframe
+
+    return unframe(blob, FAMILY_CPC)
+
+
+@pytest.mark.parametrize("lg_k,n", [(11, 300), (12, 1_000), (12, 1_500), (12, 2_000), (14, 5_000)])
+def test_cpc_sparse_blob_written_at_level6_still_reads(lg_k, n):
+    """Sparse CPC blobs are Huffman-only deflate now; a blob written the
+    old way (default-strategy level 6) must read back to the same
+    sketch.  Huffman-only finds no LZ77 matches, so it may be slightly
+    larger (measured up to +1.3%; at 2,000 entries it is smaller)."""
+    import zlib
+
+    from datasketches_spark.sketches.base import FAMILY_CPC, frame
+
+    sk = CpcSketch(lg_k)
+    sk.update_values(np.random.default_rng(n).integers(0, 1 << 40, n))
+    assert sk.mode == 0  # sparse
+    new = sk.serialize()
+    payload = zlib.decompress(_cpc_stream(new))
+    old = frame(FAMILY_CPC, zlib.compress(payload, 6))
+    assert old != new and len(new) <= 1.02 * len(old)
+    rt = CpcSketch.deserialize(old)
+    assert rt.mode == sk.mode
+    np.testing.assert_array_equal(rt.sparse, sk.sparse)
+    np.testing.assert_array_equal(rt.sparse_coupons, sk.sparse_coupons)
+    assert rt.serialize() == new
+    assert rt.get_estimate() == sk.get_estimate()
+
+
+def test_cpc_dense_bytes_keep_level6_deflate():
+    import zlib
+
+    sk = CpcSketch(10)
+    sk.update_values(np.arange(20_000, dtype=np.int64))
+    assert sk.mode != 0  # dense
+    stream = _cpc_stream(sk.serialize())
+    assert zlib.compress(zlib.decompress(stream), 6) == stream
+
+
 # ---------------- Frequent Items ----------------------------------------
 
 
@@ -359,6 +400,29 @@ class TestFrequentItems:
         sk = FrequentItemsSketch()
         with pytest.raises(ValueError):
             sk.get_frequent_items("BOGUS")
+
+    def test_framed_codec_bytes_roundtrip_non_ascii(self):
+        """The framed layout is ``<BQQI`` then per item ``<Iq`` (utf-8
+        length, count) and the utf-8 bytes, in insertion order."""
+        import struct
+
+        from datasketches_spark.sketches.base import FAMILY_FREQUENT_ITEMS, frame
+
+        sk = FrequentItemsSketch(6)
+        items = ["héllo"] * 4 + ["日本語"] * 3 + ["a"] + ["😀x"] * 2 + [""]
+        items += [f"noise_{i}" for i in range(60)]  # forces a purge
+        sk.update_series(pd.Series(items))
+        assert sk.offset > 0 and "日本語" in sk.counts
+        blob = sk.serialize()
+        want = [struct.pack("<BQQI", sk.lg_max_k, sk.offset, sk.stream_weight, len(sk.counts))]
+        for item, c in sk.counts.items():
+            b = item.encode("utf-8")
+            want += [struct.pack("<Iq", len(b), c), b]
+        assert blob == frame(FAMILY_FREQUENT_ITEMS, b"".join(want))
+        rt = FrequentItemsSketch.deserialize(blob)
+        assert list(rt.counts.items()) == list(sk.counts.items())
+        assert (rt.offset, rt.stream_weight) == (sk.offset, sk.stream_weight)
+        assert rt.serialize() == blob
 
 
 # ---------------- framing ------------------------------------------------
